@@ -81,7 +81,13 @@ class AutoTimeSeries:
         self.score_type = score_type
         self.model_config = dict(model_config or {})
         self.ml_tune = ml_tune
+        # boost rounds: set by ml_tune at fit, or by the caller before
+        # fit — so, unlike the fitted state below, a refit keeps it
         self.ml_max_iter_: int = 40
+        self._reset_fitted()
+
+    def _reset_fitted(self) -> None:
+        """Every attribute a fit sets, in its unfitted state."""
         self.ml_trials_: pd.DataFrame | None = None
         self.multi_: dict[str, "AutoTimeSeries"] | None = None
         self.freq_: str | None = None
@@ -100,6 +106,14 @@ class AutoTimeSeries:
         self.ml_fitted_: tuple | None = None  # (assembler, model, feature_cols)
         self.label_encoder_ = None  # classification target codec
         self._intervals_: DataFrame | None = None
+
+    def _release(self) -> None:
+        """Unpersist what the last fit cached, sub-models included."""
+        for sub in (self.multi_ or {}).values():
+            sub._release()
+        for cached in (self.train_df_, self.predictions_, self.scores_, self._intervals_):
+            if cached is not None:
+                cached.unpersist()
 
     # ------------------------------------------------------------ fit
 
@@ -120,6 +134,10 @@ class AutoTimeSeries:
         sep: str = ",",
         series_id: str | None = None,
     ) -> "AutoTimeSeries":
+        # a refit starts from scratch: nothing of an earlier fit (its
+        # intervals, sub-models, label codec) may serve this one
+        self._release()
+        self._reset_fitted()
         if isinstance(target, (list, tuple)):
             return self._fit_multi_label(
                 traindata, ts_column, list(target), sep=sep, series_id=series_id
@@ -213,22 +231,31 @@ class AutoTimeSeries:
                     exog_cols=self.exog_cols_,
                     holdout=self.forecast_period,
                 )
-            self.ml_cv_, ml_fold_preds = ML.cv_scores_ml(
-                df,
-                lags=self.lags,
-                n_splits=self.n_splits,
-                horizon=self.forecast_period,
-                exog_cols=self.exog_cols_,
-                max_iter=self.ml_max_iter_,
-                return_preds=True,
+
+            def cv():
+                return ML.cv_scores_ml(
+                    df,
+                    lags=self.lags,
+                    n_splits=self.n_splits,
+                    horizon=self.forecast_period,
+                    exog_cols=self.exog_cols_,
+                    max_iter=self.ml_max_iter_,
+                    return_preds=True,
+                )
+
+            def refit():
+                feat, feature_cols = ML.build_features(
+                    df, "y", lags=self.lags, exog_cols=self.exog_cols_
+                )
+                assembler, model = ML.fit_gbt(
+                    feat, feature_cols, "y", max_iter=self.ml_max_iter_
+                )
+                return assembler, model, feature_cols
+
+            # the refit needs nothing from CV: fit it beside the folds (job groups kept)
+            (self.ml_cv_, ml_fold_preds), self.ml_fitted_ = ML.in_threads(
+                spark, lambda task: task(), (cv, refit)
             )
-            feat, feature_cols = ML.build_features(
-                df, "y", lags=self.lags, exog_cols=self.exog_cols_
-            )
-            assembler, model = ML.fit_gbt(
-                feat, feature_cols, "y", max_iter=self.ml_max_iter_
-            )
-            self.ml_fitted_ = (assembler, model, feature_cols)
             ml_future = ML.recursive_forecast_ml(
                 df,
                 self.forecast_period,
@@ -533,7 +560,7 @@ class AutoTimeSeries:
 
         test_df = self._load_testdata(testdata, sep)
         if name in ("ml_gbt", "ml_gbt_classifier"):
-            return self._predict_ml_testdata(test_df)
+            return self._predict_ml_testdata(test_df, simple)
         return self._predict_worker_testdata(name, test_df, simple)
 
     def _forecast_horizon(self, name: str, horizon: int, simple: bool) -> DataFrame:
@@ -560,7 +587,10 @@ class AutoTimeSeries:
             .orderBy("series_id", "ts")
         )
 
-    def _predict_ml_testdata(self, test_df: DataFrame) -> DataFrame:
+    def _predict_ml_testdata(self, test_df: DataFrame, simple: bool = True) -> DataFrame:
+        """ML rows on unseen data; ``simple=False`` (regression) adds
+        the interval columns from ml_gbt's out-of-fold residuals, the
+        same spread the stored forecast uses."""
         spark = self.train_df_.sparkSession
         test_pdf = test_df.select(
             "series_id", "ts", *self.exog_cols_
@@ -580,6 +610,20 @@ class AutoTimeSeries:
             ).select(
                 "series_id", "ts", "yhat", F.col("_code_value").alias("yhat_label")
             )
+        elif not simple:
+            folds = self.predictions_.filter(
+                (F.col("model") == "ml_gbt") & (F.col("fold") >= 0)
+            ).select("model", "series_id", "ts", "fold", "yhat")
+            fut = sdf.select(
+                F.lit("ml_gbt").alias("model"),
+                "series_id",
+                "ts",
+                F.lit(-1).alias("fold"),
+                "yhat",
+            )
+            sdf = REG.with_prediction_intervals(
+                folds.unionByName(fut), self.train_df_
+            ).select("series_id", "ts", "yhat", "mean_se", "yhat_lower", "yhat_upper")
         return sdf.orderBy("series_id", "ts")
 
     def _predict_worker_testdata(

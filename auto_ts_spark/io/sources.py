@@ -12,9 +12,11 @@ Reference parity (see SURVEY.md §2.1):
   :func:`infer_datetime_format`: sample rows, try candidate Spark
   ``to_timestamp`` patterns, pick the first that parses every sample.
 
-Scale notes: format inference runs on a driver-side sample (``take``),
-never a full scan; the actual parse is a single JVM-side
-``to_timestamp(col, fmt)`` expression — no Python in the hot path.
+Scale notes: format inference reads a 12-row sample (``limit`` +
+``collect``), never a full scan. The probe then scores every candidate
+pattern in one aggregate over the sample as literals — a JVM-only
+frame, one Spark job, no Python workers. The actual parse is a single
+JVM-side ``to_timestamp(col, fmt)`` expression.
 """
 
 from __future__ import annotations
@@ -78,16 +80,26 @@ def infer_datetime_format(
 
     Driver-side on a small sample (the reference uses 12 rows); the
     winning format is then applied as one ``to_timestamp`` expression.
+    All candidates are scored in one pass: the samples become literal
+    rows (no Python RDD, so no Python workers) and one ``bool_and`` per
+    candidate says whether it parses all of them.
     """
     samples = [s for s in samples if s is not None]
     if not samples:
         return None
-    sdf = spark.createDataFrame([(s,) for s in samples], "raw string")
-    for fmt in candidates:
-        parsed = sdf.select(F.try_to_timestamp(F.col("raw"), F.lit(fmt)).alias("ts"))
-        if parsed.filter(F.col("ts").isNull()).limit(1).count() == 0:
-            return fmt
-    return None
+    # one partition: the aggregate then needs no exchange, so no second job
+    raw = (
+        spark.sql("SELECT 1")
+        .select(F.explode(F.array(*[F.lit(s) for s in samples])).alias("raw"))
+        .coalesce(1)
+    )
+    parses = raw.agg(
+        *[
+            F.bool_and(F.try_to_timestamp(F.col("raw"), F.lit(fmt)).isNotNull())
+            for fmt in candidates
+        ]
+    ).first()
+    return next((fmt for fmt, ok in zip(candidates, parses) if ok), None)
 
 
 def _nano_ts_columns(path: str) -> list[str]:

@@ -27,11 +27,14 @@ batched Spark predicts.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 import pandas as pd
 from pyspark.ml.feature import VectorAssembler
 from pyspark.ml.regression import GBTRegressor
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from auto_ts_spark.functions.calendar import add_calendar_features
 from auto_ts_spark.operators.folds import with_row_number
@@ -194,6 +197,19 @@ def _per_series_cutoff(feat: DataFrame) -> DataFrame:
     return feat.withColumn("_n", F.count(F.lit(1)).over(w))
 
 
+def in_threads(spark, fn, args) -> list:
+    """``[fn(a) for a in args]`` with each call on its own driver thread,
+    results in ``args`` order. Each thread starts with a copy of the
+    caller's Spark local properties (job group, scheduler pool)."""
+    args = list(args)
+    with ThreadPoolExecutor(max_workers=max(len(args), 1)) as pool:
+        # wrap per call: inheritable_thread_target captures ONE copy of
+        # the properties, and threads sharing it see each other's
+        # setJobGroup
+        futures = [pool.submit(inheritable_thread_target(spark)(fn), a) for a in args]
+        return [f.result() for f in futures]
+
+
 def cv_scores_ml(
     df: DataFrame,
     *,
@@ -215,17 +231,18 @@ def cv_scores_ml(
     (reference build_ml.py:674-680)."""
     feat, feature_cols = build_features(df, target, lags=lags, exog_cols=exog_cols)
     feat = _per_series_cutoff(feat).cache()
+    # fill the cache before the folds read it concurrently
+    feat.count()
     min_train = max(10, len(feature_cols))
-    rows = []
-    pred_parts: list[DataFrame] = []
-    for fold in range(n_splits):
+
+    def run_fold(fold: int):
         cut = F.col("_n") - (n_splits - fold) * horizon
         train = feat.filter((F.col("rn") <= cut) & (cut >= min_train))
         test = feat.filter(
             (F.col("rn") > cut) & (F.col("rn") <= cut + horizon) & (cut >= min_train)
         )
         if train.limit(1).count() == 0:
-            continue
+            return None
         assembler, model = fit_gbt(train, feature_cols, target, max_iter=max_iter)
         pred = model.transform(assembler.transform(test))
         agg = pred.agg(
@@ -235,25 +252,26 @@ def cv_scores_ml(
         ).collect()[0]
         sd = float(agg["sd"]) if agg["sd"] else None
         nrmse = float(agg["rmse"]) / sd if sd else None
-        rows.append(("ml_gbt", fold, float(agg["rmse"]), int(agg["n"]), nrmse))
-        if return_preds:
-            pred_parts.append(
-                pred.select(
-                    "series_id",
-                    "ts",
-                    F.lit(fold).cast("int").alias("fold"),
-                    F.col("prediction").alias("yhat"),
-                )
-            )
+        row = ("ml_gbt", fold, float(agg["rmse"]), int(agg["n"]), nrmse)
+        part = pred.select(
+            "series_id",
+            "ts",
+            F.lit(fold).cast("int").alias("fold"),
+            F.col("prediction").alias("yhat"),
+        )
+        return row, part
+
+    # independent fits on one read-only cache: a thread each, job groups kept
+    results = [r for r in in_threads(df.sparkSession, run_fold, range(n_splits)) if r]
     feat.unpersist()
-    summary = pd.DataFrame(rows, columns=["model", "fold", "rmse", "n_test", "nrmse"])
+    summary = pd.DataFrame(
+        [row for row, _ in results], columns=["model", "fold", "rmse", "n_test", "nrmse"]
+    )
     if not return_preds:
         return summary
     fold_preds = None
-    if pred_parts:
-        fold_preds = pred_parts[0]
-        for p in pred_parts[1:]:
-            fold_preds = fold_preds.unionByName(p)
+    for _, part in results:
+        fold_preds = part if fold_preds is None else fold_preds.unionByName(part)
     return summary, fold_preds
 
 

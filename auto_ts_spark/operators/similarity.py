@@ -80,18 +80,18 @@ def brute_force_topk(
     # cast AND norm once per row in the projections (r14): previously
     # both the array<double> cast and the two O(dim) norm aggregates
     # were re-evaluated per (query, corpus) pair in the scored select
-    qv = F.col(vec_col).cast("array<double>")
+    v = F.col(vec_col).cast("array<double>")
     q = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"),
-            qv.alias("qvec"),
-            norm(qv).alias("_qn"),
+            v.alias("qvec"),
+            norm(v).alias("_qn"),
         )
     )
     c = ensure_parallelism(corpus).select(
         F.col(id_col).alias("neighbor_id"),
-        qv.alias("cvec"),
-        norm(qv).alias("_cn"),
+        v.alias("cvec"),
+        norm(v).alias("_cn"),
     )
     scored = (
         c.crossJoin(q)

@@ -209,7 +209,10 @@ def main() -> None:
     # run via "load_contaminated" instead of silently reporting numbers
     # the machine, not the code, produced. Additions-only: every
     # pre-existing JSON key and the single-line print are unchanged.
-    load_threshold = (os.cpu_count() or 1) / 4
+    # the cores the engine runs on (SPARK_GRAFT_CPUS sizes local[N]),
+    # not the host's: on a shared host they differ
+    ncpus_load = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    load_threshold = ncpus_load / 4
     load_wait_sec = 0.0
     while os.getloadavg()[0] > load_threshold and load_wait_sec < 120.0:
         time.sleep(5.0)
@@ -256,6 +259,7 @@ def main() -> None:
                 "loadavg_before": load_before,
                 "loadavg_after": tuple(round(x, 2) for x in os.getloadavg()),
                 "ncpus": os.cpu_count(),
+                "load_threshold_ncpus": ncpus_load,
                 "load_contaminated": load_contaminated,
                 "load_wait_sec": load_wait_sec,
                 "value_composition": "17-query r1-r4 basket; curate_chain "

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from auto_ts_spark.io.sources import (
+    DATETIME_FORMATS,
     dedup_columns,
     infer_datetime_format,
     load_table,
@@ -52,6 +53,78 @@ def test_datetime_format_inference(spark, samples, expected_prefix):
 
 def test_datetime_inference_unparseable_returns_none(spark):
     assert infer_datetime_format(spark, ["not-a-date", "also not"]) is None
+
+
+def _reference_formats(spark, sample_sets):
+    """The per-candidate rule for each sample list: the first candidate
+    under which no sample parses to NULL. All lists and candidates are
+    parsed in one collect; the candidate loop runs over the result."""
+    rows = [(k, s) for k, samples in enumerate(sample_sets) for s in samples if s is not None]
+    parsed = (
+        spark.createDataFrame(rows, "k int, raw string").select(
+            "k",
+            *[F.try_to_timestamp(F.col("raw"), F.lit(f)).alias(f"c{i}") for i, f in enumerate(DATETIME_FORMATS)],
+        )
+        .collect()
+        if rows
+        else []
+    )
+    out = []
+    for k in range(len(sample_sets)):
+        mine = [r for r in parsed if r["k"] == k]
+        fmt = None
+        for i, candidate in enumerate(DATETIME_FORMATS):
+            if mine and all(r[f"c{i}"] is not None for r in mine):
+                fmt = candidate
+                break
+        out.append(fmt)
+    return out
+
+
+@pytest.fixture(scope="module")
+def rendered(spark):
+    """12 timestamps rendered in every candidate pattern: {fmt: strings}."""
+    ts = pd.date_range("2019-01-31 13:45:10", periods=12, freq="37D")
+    sdf = spark.createDataFrame(pd.DataFrame({"t": ts}))
+    rows = sdf.select(
+        *[F.date_format("t", f).alias(f"c{i}") for i, f in enumerate(DATETIME_FORMATS)]
+    ).collect()
+    return {f: [r[i] for r in rows] for i, f in enumerate(DATETIME_FORMATS)}
+
+
+def test_datetime_probe_matches_per_candidate_rule(spark, rendered):
+    """For a sample rendered in each candidate pattern, the one-pass
+    probe returns what the first-candidate-that-parses-all rule does."""
+    got = [infer_datetime_format(spark, s) for s in rendered.values()]
+    assert got == _reference_formats(spark, list(rendered.values()))
+    # some dates have a day past 12, so no rendering also reads as an
+    # earlier candidate (day/month swapped)
+    assert got == list(rendered)
+
+
+def test_datetime_probe_mixed_and_null_samples(spark):
+    mixed = ["2023-01-15", "01/15/2023", "2023-02-15"]
+    with_null = ["15/01/2023", None, "20/02/2023"]
+    assert _reference_formats(spark, [mixed, with_null]) == [None, "dd/MM/yyyy"]
+    assert infer_datetime_format(spark, mixed) is None
+    assert infer_datetime_format(spark, with_null) == "dd/MM/yyyy"
+    assert infer_datetime_format(spark, [None]) is None
+
+
+@pytest.mark.parametrize("winner", [DATETIME_FORMATS[0], "dd/MM/yyyy", DATETIME_FORMATS[-1], None])
+def test_datetime_probe_job_count(spark, rendered, winner):
+    """Every candidate is scored in at most 2 Spark jobs, whichever wins."""
+    samples = rendered[winner] if winner else ["not-a-date"]
+    sc = spark.sparkContext
+    group = f"probe-jobs-{winner}"
+    sc.setJobGroup(group, "datetime probe job count")
+    try:
+        fmt = infer_datetime_format(spark, samples)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert fmt == _reference_formats(spark, [samples])[0]
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
 
 
 def test_dedup_columns_keeps_first(spark):

@@ -234,6 +234,134 @@ def test_ml_intervals_not_null(spark, fitted_ats):
     assert (out["yhat"] < out["yhat_upper"]).all()
 
 
+def test_predict_ml_on_unseen_intervals(spark, fitted_ats):
+    """predict(unseen, model="ml", simple=False) carries the interval
+    columns, from the same out-of-fold residual spread as the stored
+    forecast; yhat is the simple=True yhat."""
+    ats, _, test = fitted_ats
+    unseen = spark.createDataFrame(test.drop(columns=["series_id", "y"]))
+    simple = ats.predict(unseen, model="ml").toPandas()
+    full = ats.predict(unseen, model="ml", simple=False).toPandas()
+    assert list(full.columns) == ["series_id", "ts", "yhat", "mean_se", "yhat_lower", "yhat_upper"]
+    assert list(full["ts"]) == list(simple["ts"])
+    assert np.allclose(full["yhat"].to_numpy(), simple["yhat"].to_numpy())
+    stored_se = ats.predict(model="ml", simple=False).toPandas()["mean_se"]
+    assert (full["mean_se"] == stored_se.iloc[0]).all() and (full["mean_se"] > 0).all()
+    assert (full["yhat_lower"] < full["yhat"]).all()
+    assert (full["yhat"] < full["yhat_upper"]).all()
+
+
+def test_cv_scores_ml_fold_fanout_is_deterministic(spark):
+    """The folds fit concurrently; fold rows and fold predictions come
+    back identical between runs and in fold order."""
+    sdf = spark.createDataFrame(_series(n=60, exog=True))
+
+    def run():
+        summary, preds = ML.cv_scores_ml(
+            sdf, n_splits=3, horizon=4, exog_cols=["x"], max_iter=1, return_preds=True
+        )
+        return summary, preds.toPandas()
+
+    (s1, p1), (s2, p2) = run(), run()
+    assert list(s1["fold"]) == [0, 1, 2]
+    pd.testing.assert_frame_equal(s1, s2)
+    assert list(p1["fold"]) == sorted(p1["fold"]) and set(p1["fold"]) == {0, 1, 2}
+    pd.testing.assert_frame_equal(p1, p2)
+
+
+def test_in_threads_job_groups_are_per_thread(spark):
+    """Each fit thread starts in the caller's job group and its own
+    setJobGroup stays its own: more threads than cores, a short switch
+    interval, and every job lands in the group its thread set."""
+    import sys
+
+    sc = spark.sparkContext
+    sc.setJobGroup("in-threads-caller", "caller")
+
+    def work(i):
+        inherited = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(f"in-threads-{i}", "worker")
+        spark.range(1).collect()  # one job
+        return inherited, sc.getLocalProperty("spark.jobGroup.id")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        got = ML.in_threads(spark, work, range(12))
+        caller_after = sc.getLocalProperty("spark.jobGroup.id")
+    finally:
+        sys.setswitchinterval(interval)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == [("in-threads-caller", f"in-threads-{i}") for i in range(12)]
+    assert caller_after == "in-threads-caller"
+    tracker = sc.statusTracker()
+    assert [len(tracker.getJobIdsForGroup(f"in-threads-{i}")) for i in range(12)] == [1] * 12
+
+
+def _refit_data():
+    a = _series(n=48, seed=1, exog=True).drop(columns=["series_id"])
+    b = _series(n=48, seed=5, exog=True).drop(columns=["series_id"])
+    return a, b.iloc[:40], b.iloc[40:].drop(columns=["y"])
+
+
+def test_refit_matches_fresh_fit(spark):
+    """A fit leaves nothing behind for the next: after a fit on A whose
+    intervals were served, and with the label codec a classification
+    fit leaves (planted: a real classifier fit costs ~1 min), a fit on
+    B serves what a fresh object fitted on B serves."""
+    from auto_ts_spark.auto import AutoTimeSeries
+    from auto_ts_spark.operators.encoders import LabelEncoder
+
+    a, train_b, test_b = _refit_data()
+
+    def make():
+        ats = AutoTimeSeries(forecast_period=4, n_splits=2, model_type=["ml", "prophet"])
+        ats.ml_max_iter_ = 2  # a caller setting: kept across fits
+        return ats
+
+    def served(ats):
+        unseen = spark.createDataFrame(test_b)
+        return (
+            ats.get_leaderboard(),
+            ats.predict(simple=False).toPandas(),
+            ats.predict(unseen, model="ml", simple=False).toPandas(),
+            ats.predict(unseen, model="prophet", simple=False).toPandas(),
+        )
+
+    reused = make()
+    reused.fit(spark.createDataFrame(a), "ts", "y")
+    reused.predict(simple=False).count()  # caches A's intervals
+    labels = spark.createDataFrame(pd.DataFrame({"y": ["down", "up"]}))
+    reused.label_encoder_ = LabelEncoder("y", out_col="_y_code").fit(labels)
+    reused.fit(spark.createDataFrame(train_b), "ts", "y")
+    assert reused.label_encoder_ is None and reused.ml_max_iter_ == 2
+    fresh = make().fit(spark.createDataFrame(train_b), "ts", "y")
+    for got, want in zip(served(reused), served(fresh)):
+        pd.testing.assert_frame_equal(got, want)
+
+
+def test_refit_after_multi_label(spark):
+    """A single-target fit after a multi-label fit serves its own
+    forecast, not the earlier sub-models'."""
+    from auto_ts_spark.auto import AutoTimeSeries
+
+    a, train_b, _ = _refit_data()
+
+    def make():
+        return AutoTimeSeries(forecast_period=4, n_splits=2, model_type="prophet")
+
+    reused = make()
+    reused.fit(spark.createDataFrame(a), "ts", ["y", "x"])
+    reused.fit(spark.createDataFrame(train_b), "ts", "y")
+    assert reused.multi_ is None
+    fresh = make().fit(spark.createDataFrame(train_b), "ts", "y")
+    pd.testing.assert_frame_equal(reused.get_leaderboard(), fresh.get_leaderboard())
+    pd.testing.assert_frame_equal(
+        reused.predict(simple=False).toPandas(), fresh.predict(simple=False).toPandas()
+    )
+
+
 def test_ml_gbt_on_scores_leaderboard(spark, fitted_ats):
     """ml_gbt fold rows flow through the same score_predictions path
     as the workers — per-series scores, real mae, no double counting."""
